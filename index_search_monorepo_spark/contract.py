@@ -1303,7 +1303,7 @@ def q_allfields_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the fold compute_allfields performs over the synthesized record below,
+# the fold extract_allfields performs over the synthesized record below,
 # expressed directly on the source columns (independent of any XML parsing);
 # 'Q"A'' & <tag>' is the SQL-quoted special-characters subfield
 _ALLFIELDS_FOLD_SQL = quoteattr_sql(
@@ -1333,8 +1333,8 @@ _ALLFIELDS_FOLD_SQL = quoteattr_sql(
 def q_allfields_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 — the REAL MARC-XML allfields fold in the driver gate (VERDICT r01
     missing #1): a deterministic MARC21-slim record is synthesized from
-    documents columns, and the Spark side runs the actual iterparse pandas
-    UDF (functions/marc.py:compute_allfields; reference
+    documents columns, and the Spark side runs the shipped native
+    from_xml expression (functions/marc.py:extract_allfields; reference
     full_text_document_generator.py:111-142). The record exercises every
     branch: controlfield skipped, datafield tag 050 <= 99 skipped, 245/100
     subfield children appended, 500 childless element.text appended,

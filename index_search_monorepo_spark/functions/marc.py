@@ -1,62 +1,105 @@
-"""A2 — `allfields` extraction from a MARC21-slim XML string column.
+"""A2 — `allfields` from a MARC21-slim XML string column, as one native
+Catalyst expression (no Python worker).
 
-Reference semantics (full_text_document_generator.py:111-142): fold over
-datafield elements with numeric tag > 99 delivered at the lxml iterparse
-'start' event; for each, append every subfield's text (or the element's own
-text when it has no children), calling .strip() on the accumulator before
-each append; finally wrap with xml.sax.saxutils.quoteattr.
+Reference (full_text_document_generator.py:111-142; byte-for-byte oracle
+`oracle.reference_oracle.oracle_allfields`): over datafields with numeric
+tag > 99, append each child's text ('None' when empty), or the childless
+element's own text when non-empty, stripping the accumulator before each
+append; then xml.sax.saxutils.quoteattr.
 
-Golden-tested byte-for-byte against the reference's own fixture
-(tests/document_generator_tests/data/fullrecord.xml → the Defoe record
-string, document_generator_test.py:29-32, 88-92).
-
-This is inherently XML parsing → pandas UDF (Arrow-batched lxml per batch;
-the reference's own O10 rationale: streaming iterparse). Never row-at-a-time
-Python: one UDF invocation handles a whole Arrow batch.
+Spark's `from_xml` parses the record (DTD support and external entities
+off, so no file is ever read); a malformed record yields NULL. Outside
+MARC21-slim the output differs from the reference, pinned by
+tests/test_allfields.py: non-subfield children of a datafield are skipped;
+markup nested in a subfield stays in its text; content after the root
+element is ignored; an entity declared in a DOCTYPE yields NULL; tags in
+non-ASCII digits count as non-numeric; only elements named `datafield`
+count.
 """
 
 from __future__ import annotations
 
-import io
-import xml.sax.saxutils
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
+from index_search_monorepo_spark.functions.text import (
+    PY_WHITESPACE,
+    pystrip,
+    quoteattr_expr,
+)
 
-
-def compute_allfields(catalog_xml: str | None) -> str | None:
-    """Implementation note: the reference iterates lxml 'start' events (where
-    children are available thanks to lxml's chunked event buffering); this
-    container has no lxml, so we fold at stdlib ElementTree 'end' events —
-    children are guaranteed complete there, and for non-nested datafields the
-    visit order and emitted text are identical (golden-verified against the
-    reference's fullrecord.xml fixture + expected string in
-    tests/test_allfields.py). The `str(child.text)` quirk — a None subfield
-    text appends the literal 'None' — is preserved."""
-    if catalog_xml is None:
-        return None
-    import xml.etree.ElementTree as ET
-
-    acc = ""
-    source = io.BytesIO(catalog_xml.encode("utf-8"))
-    for _event, element in ET.iterparse(source, events=("end",)):
-        if element.tag.find("datafield") > -1:
-            tag = element.attrib.get("tag")
-            try:
-                numeric = int(tag)
-            except (ValueError, TypeError):
-                continue
-            if numeric > 99:
-                children = list(element)
-                if children:
-                    for child in children:
-                        acc = acc.strip() + " " + str(child.text)
-                elif element.text:
-                    acc = acc.strip() + " " + str(element.text)
-    return xml.sax.saxutils.quoteattr(acc)
+_DATAFIELD = "array<struct<_tag: string, subfield: array<string>, ownText: string>>"
+_SCHEMA = (
+    f"record array<struct<datafield: {_DATAFIELD}>>, datafield {_DATAFIELD}, "
+    "_corrupt_record string"
+)
+_OPTIONS = {
+    "ignoreNamespace": "true",
+    "ignoreSurroundingSpaces": "false",
+    "columnNameOfCorruptRecord": "_corrupt_record",
+}
+# from_xml drops an element's whitespace-only text but keeps a child's, so
+# a childless datafield's text moves into an <ownText> child first
+_NS_PREFIX = r"(?:[^\s/>:=]+:)?"
+_ATTRS = r"""(?:\s+[^\s=/>]+\s*=\s*(?:"[^"]*"|'[^']*'))*\s*"""
+_CHILDLESS = (
+    rf"(?s)(<{_NS_PREFIX}datafield{_ATTRS}>)"
+    r"([^<]*+(?:(?:<!\[CDATA\[.*?\]\]>|<!--.*?-->|<\?.*?\?>)[^<]*+)*+)"
+    rf"(</{_NS_PREFIX}datafield\s*>)"
+)
 
 
-@pandas_udf(StringType())
-def extract_allfields(fullrecord: pd.Series) -> pd.Series:
-    return fullrecord.map(compute_allfields)
+def _bind(e: Column, f) -> Column:
+    """f(e) with `e` evaluated once (lambdas get no CSE)."""
+    return F.element_at(F.transform(F.array(e), f), 1)
+
+
+def _tag_over_99(tag: Column) -> Column:
+    """Python `int(tag) > 99`, including sign and `_` digit separators."""
+    t = pystrip(tag)
+    return t.rlike(r"^[+-]?[0-9](?:_?[0-9])*$") & F.replace(
+        t, F.lit("_"), F.lit("")
+    ).rlike(r"^\+?0*[1-9][0-9]{2,}$")
+
+
+def _strip_fold(t: Column) -> Column:
+    """acc = acc.strip() + ' ' + x over t from acc = '', in closed form:
+    lstrip(' '.join(r for r in map(rstrip, t[:-1]) if r)) + ' ' + t[-1]."""
+    ws = F.lit(PY_WHITESPACE)
+    n = F.size(t)
+    head = F.filter(
+        F.transform(F.slice(t, 1, F.greatest(n - 1, F.lit(0))),
+                    lambda x: F.rtrim(x, ws)),
+        lambda x: F.length(x) > 0,
+    )
+    return F.when(n == 0, F.lit("")).otherwise(F.concat(
+        F.ltrim(F.array_join(head, " "), ws), F.lit(" "),
+        F.try_element_at(t, F.lit(-1)),
+    ))
+
+
+def _fold_record(p: Column) -> Column:
+    datafields = F.concat(
+        F.coalesce(F.flatten(F.array_compact(p["record"]["datafield"])), F.array()),
+        F.coalesce(p["datafield"], F.array()),
+    )
+    texts = F.flatten(F.transform(
+        F.filter(datafields, lambda d: _tag_over_99(d["_tag"])),
+        lambda d: F.coalesce(
+            F.transform(d["subfield"],
+                        lambda s: F.coalesce(F.nullif(s, F.lit("")), F.lit("None"))),
+            F.when(F.length(d["ownText"]) > 0, F.array(d["ownText"])),
+            F.array().cast("array<string>"),
+        ),
+    ))
+    return F.when(
+        p.isNotNull() & p["_corrupt_record"].isNull(),
+        quoteattr_expr(_bind(texts, _strip_fold)),
+    )
+
+
+def extract_allfields(fullrecord: Column) -> Column:
+    """MARC21-slim XML column -> quoteattr'd allfields (NULL when the
+    record is NULL or malformed)."""
+    doc = F.regexp_replace(fullrecord, _CHILDLESS, "$1<ownText>$2</ownText>$3")
+    return _bind(F.from_xml(doc, _SCHEMA, _OPTIONS), _fold_record)

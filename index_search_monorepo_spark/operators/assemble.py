@@ -22,9 +22,7 @@ falsy skip, text_processor.py:67).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from index_search_monorepo_spark.functions.marc import extract_allfields
 from index_search_monorepo_spark.operators.catalog import (
     IDENTICAL_CATALOG_METADATA,
     RENAMED_CATALOG_METADATA,
@@ -52,13 +50,10 @@ def assemble_full_text_documents(
 ) -> DataFrame:
     """docs_with_ocr: (doc_id, ocr, [rights, ht_heldby, ht_heldby_brlm,
     coll_id] already enriched); item_metadata: catalog_item_metadata()
-    output; mets_fields: with_mets_fields() output. Joins on doc_id ==
-    ht_id_item; computes allfields from the record's fullrecord then drops it
-    (the pop at :166)."""
-    meta = item_metadata
-    if "allfields" not in meta.columns:
-        meta = meta.withColumn("allfields", extract_allfields(F.col("fullrecord")))
-    meta = meta.drop("fullrecord", "_doc_json")
+    output with `allfields` already computed (functions/marc.py);
+    mets_fields: with_mets_fields() output. Joins on doc_id == ht_id_item
+    and drops fullrecord (the pop at :166)."""
+    meta = item_metadata.drop("fullrecord", "_doc_json")
     joined = (
         docs_with_ocr.withColumnRenamed("doc_id", "id")
         .join(meta.withColumnRenamed("ht_id_item", "id"), "id", "left")

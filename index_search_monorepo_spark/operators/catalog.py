@@ -88,8 +88,8 @@ def catalog_item_metadata(
     falsy), P4 renamed copies, computed M-fields, vol_id.
 
     extra_passthrough: record-level columns copied through unchanged (e.g. a
-    pre-computed `allfields` — computing it BEFORE the posexplode runs the
-    MARC UDF once per record instead of once per item)."""
+    pre-computed `allfields` — computing it BEFORE the posexplode parses
+    the MARC record once per record instead of once per item)."""
     dtypes = {f.name: f.dataType for f in catalog.schema.fields}
     # keep the raw record's enumPublishDate for bothPublishDate before the
     # quirk column shadows it

@@ -321,9 +321,15 @@ def decontaminate(
     contamination-proportional frame and coalesces, instead of paying an
     extra corpus scan + a doc-cardinality broadcast build per
     materialization (r6; the with_adaptive_quality stats_df convention).
+    Every returned doc has at least one hit, so only min_hits=1 is
+    accepted there: the caller owns any higher threshold.
     spread=False skips the internal round-robin repartition when the
     caller passes an already-spread (or many-split) frame, so one
     exchange serves every consumer of that frame."""
+    if hits_only and min_hits != 1:
+        raise ValueError(
+            f"hits_only=True returns unthresholded hits; got min_hits={min_hits}"
+        )
     # r6: persist the distinct benchmark-shingle frame — benchmark
     # suites are bounded (MBs), and unpersisted every materialization
     # replays the benchmark scan + explode + distinct before the

@@ -59,7 +59,9 @@ def spread_small_scan(df: DataFrame, key: str | None = "doc_id") -> DataFrame:
     (spark.sql.execution.sortBeforeRepartition, the SPARK-23207
     retry-determinism guard) that the deterministic key makes unnecessary
     — measured 0.35 s -> 0.26 s on a 50k-doc spread (r6) — and is the
-    retry-safe form the round-robin sort exists to approximate. Falls
+    retry-safe form the round-robin sort exists to approximate. A NULL
+    key hashes to the seed constant, so those rows hash their whole
+    (map-free) row instead and still spread deterministically. Falls
     back to round-robin when the key column is absent."""
     spark = df.sparkSession
     try:
@@ -69,7 +71,14 @@ def spread_small_scan(df: DataFrame, key: str | None = "doc_id") -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     if key and key in df.columns:
-        return df.repartition(n, F.pmod(F.xxhash64(key), F.lit(100 * n)))
+        row = [
+            f.name for f in df.schema.fields
+            if "map<" not in f.dataType.simpleString()
+        ]
+        h = F.when(F.col(key).isNull(), F.xxhash64(*row)).otherwise(
+            F.xxhash64(key)
+        )
+        return df.repartition(n, F.pmod(h, F.lit(100 * n)))
     return df.repartition(n)
 
 

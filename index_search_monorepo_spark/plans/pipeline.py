@@ -105,14 +105,10 @@ def extract_documents(
         # on doc_id share one fact-side exchange and parallelize the build.
         dim_join=doc_meta_join,
     )
-    # the catalog dim often lands as one parquet file -> one split; without
-    # the spread the MARC-XML parse runs on ONE core at any cluster size (a
-    # serial stage that caps N->4N scaling; measured ~30% of 32-core wall)
-    # key=None: round-robin, deliberately NOT the hashed-key spread —
-    # interleaved A/B (r6) read the hashed catalog spread ~10% slower for
-    # the whole extraction job (4.34 vs 3.94 s best-of-6 at the 12k
-    # corpus): the MARC parse cost per record is high-variance, so the
-    # hash's small count imbalance costs more than round-robin's sort
+    # the catalog dim often lands as one parquet file -> one split; the
+    # spread keeps the MARC-XML parse off a single core at any cluster size.
+    # key=None: round-robin — an r6 A/B (then a Python UDF parse, whose
+    # per-record cost is high-variance) read the hashed spread ~10% slower
     catalog = spread_small_scan(tables["catalog"], key=None).withColumn(
         "allfields", extract_allfields(F.col("fullrecord"))
     )

@@ -5,6 +5,7 @@ for textstats (CLAUDE.md lesson #1)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from index_search_monorepo_spark.operators import dedup as D
@@ -280,9 +281,9 @@ class TestScaleGuards:
         assert out[(1, 1)] == 0 and out[(1, 2)] == 0
 
     def test_group_expansion_matches_self_join(self, spark):
-        """via='group' (r6 default: one band-frame pass, in-bucket pair
-        expansion) must emit exactly the pair set of the via='join'
-        equality self-join."""
+        """via='group' (the non-default alternative: one band-frame pass,
+        in-bucket pair expansion) must emit exactly the pair set of the
+        default via='join' equality self-join."""
         docs = _docs(spark)
         g = {
             (r["doc_a"], r["doc_b"])
@@ -438,6 +439,15 @@ class TestDecontaminate:
         # flagged set stays near the planted set
         n_planted = sum(1 for d in rows if d % 97 == 0)
         assert n_flagged <= n_planted + 3
+
+    def test_hits_only_rejects_min_hits(self, spark):
+        """hits_only=True returns every matched doc unthresholded, so a
+        min_hits other than 1 must raise instead of being ignored."""
+        docs = _docs(spark)
+        bench = docs.filter(F.col("doc_id") % 97 == 0).select("text")
+        with pytest.raises(ValueError, match="min_hits"):
+            D.decontaminate(docs, bench, min_hits=2, hits_only=True)
+        assert D.decontaminate(docs, bench, hits_only=True).count() >= 1
 
     def test_empty_benchmark(self, spark):
         docs = _docs(spark)

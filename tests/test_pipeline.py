@@ -10,7 +10,10 @@ from pyspark.sql import functions as F
 
 from index_search_monorepo_spark.operators.assemble import OUTPUT_FIELD_ORDER
 from index_search_monorepo_spark.operators.checkpoint import MANIFEST_DIR
-from index_search_monorepo_spark.operators.skew import salted_repartition
+from index_search_monorepo_spark.operators.skew import (
+    salted_repartition,
+    spread_small_scan,
+)
 from index_search_monorepo_spark.plans.pipeline import (
     extract_documents,
     run_extraction_job,
@@ -204,3 +207,21 @@ def test_publish_snapshot_versions_extraction_output(spark, tables, tmp_path):
     got = {r["id"] for r in changed.collect()}
     want = {r["id"] for r in redo.select("id").collect()}
     assert got == want
+
+
+def test_spread_small_scan_spreads_null_keys(spark):
+    """NULL keys must not all hash to one partition: they fall back to a
+    deterministic hash of the whole row."""
+    df = spark.range(400).select(
+        F.when(F.col("id") % 4 == 0, F.col("id").cast("string")).alias("doc_id"),
+        F.col("id").alias("v"),
+    ).coalesce(1)
+    spread = spread_small_scan(df)
+    parts = (
+        spread.filter(F.col("doc_id").isNull())
+        .select(F.spark_partition_id().alias("pid"))
+        .distinct()
+        .count()
+    )
+    assert parts > 1
+    assert spread.count() == 400

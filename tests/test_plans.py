@@ -60,13 +60,14 @@ def test_enrichment_joins_broadcast(spark, tables):
     assert "EvalPython" not in plan
 
 
-def test_pipeline_python_is_arrow_only(spark, tables):
-    """The only Python in the full assembly is the Arrow-vectorized
-    allfields UDF — no row-at-a-time BatchEvalPython anywhere."""
+def test_pipeline_plan_is_python_free(spark, tables):
+    """The full assembly runs no Python at all: MARC allfields is a native
+    expression, so neither an Arrow nor a row-at-a-time Python UDF appears
+    in the plan."""
     docs, _errors = extract_documents(spark, tables, page_threshold=20)
     plan = _plan(docs)
-    assert "BatchEvalPython" not in plan
-    assert plan.count("ArrowEvalPython") >= 1
+    assert "EvalPython" not in plan
+    assert "PythonUDF" not in plan
 
 
 def test_span_sequence_classifier_runs_once(spark, tables):
