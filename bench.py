@@ -123,7 +123,7 @@ EXTRACTION_MAX_RETRIES = int(os.environ.get("SPARK_GRAFT_EXTRACTION_RETRIES", "3
 # serial cost a 1000-executor job would not pay, and the single largest
 # term of the r3 serial fit (s = 2.31 s). Measured: -12% wall at 2 and 8
 # cores, ~equal at 32.
-DOC_META_JOIN = os.environ.get("SPARK_GRAFT_DOC_META_JOIN", "shuffle_hash")
+DOC_META_JOIN = "shuffle_hash"
 
 # Representative headline queries spanning the operator families (extraction,
 # relational, window, dedup, similarity, text analysis); the full query
@@ -347,7 +347,7 @@ def worker_serve_main(
         tables = load_corpus(spark, str(corpus_dir))
         n_docs = tables["documents_spans"].count()
         docs, _errors = extract_documents(
-            spark, tables, doc_meta_join=DOC_META_JOIN or None
+            spark, tables, doc_meta_join=DOC_META_JOIN
         )
         _materialize(docs)  # warmup
         print(

@@ -31,12 +31,10 @@ Each fold is a pure higher-order `aggregate` — JVM-side, no Python — and
 the DuckDB oracle mirrors it with `list_reduce` over single-element
 lists, so segmentations are verified symbol-for-symbol.
 
-Per-document cost shape: `with_bpe_tokens` (strategy='distinct') applies
-the fold chain only to DISTINCT pre-tokens (bounded by vocabulary), then
-broadcast-joins the segmentation back and re-aggregates per document —
-the k-fold expression never runs per corpus row, and document text never
-shuffles. strategy='inline' keeps everything row-local (zero joins) for
-small merge lists.
+Per-document cost shape: `with_bpe_tokens` applies the fold chain only to
+DISTINCT pre-tokens (bounded by vocabulary), then broadcast-joins the
+segmentation back and re-aggregates per document — the k-fold expression
+never runs per corpus row, and document text never shuffles.
 
 No reference counterpart (the reference indexes whole OCR text); this is
 the tokenization stage of the training-data-pipeline family (build
@@ -54,9 +52,8 @@ from index_search_monorepo_spark.operators.textstats import (
 )
 
 # plan-size guard: each merge adds one nested fold to the expression tree;
-# past ~hundreds the analyzer cost dominates. Large production vocabs
-# belong on the 'distinct' strategy anyway (the fold runs once per
-# distinct pre-token), but the expression itself is capped to keep plan
+# past ~hundreds the analyzer cost dominates. The fold runs once per
+# distinct pre-token, but the expression itself is capped to keep plan
 # compilation bounded.
 MAX_INLINE_MERGES = 256
 
@@ -106,8 +103,7 @@ def apply_bpe_merges_expr(
     if len(merges) > MAX_INLINE_MERGES:
         raise ValueError(
             f"{len(merges)} merges exceeds MAX_INLINE_MERGES "
-            f"({MAX_INLINE_MERGES}); segment distinct pre-tokens via "
-            "with_bpe_tokens(strategy='distinct') instead of inlining"
+            f"({MAX_INLINE_MERGES}); the fold chain would bloat the plan"
         )
     out = syms
     for left, right in merges:
@@ -216,7 +212,6 @@ def with_bpe_tokens(
     df: DataFrame,
     merges: list[tuple[str, str]],
     text_col: str = "text",
-    strategy: str = "distinct",
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per-document BPE statistics under a learned merge list, at doc
@@ -228,47 +223,11 @@ def with_bpe_tokens(
       bpe_longest_sym   : character length of the longest merged symbol
                           (pins symbol CONTENT, not just counts)
 
-    strategy='distinct' (default): segment DISTINCT pre-tokens only, then
-    broadcast-join the per-token segmentation back onto exploded
-    (doc_id, token) pairs and re-aggregate — the fold chain runs
-    vocabulary-many times, not corpus-many; only slim pairs shuffle.
-    strategy='inline': the fold chain runs inside one per-row projection —
-    zero joins/shuffles, right when the merge list is small or rows are
-    already fat."""
+    Segments DISTINCT pre-tokens only, then broadcast-joins the per-token
+    segmentation back onto exploded (doc_id, token) pairs and
+    re-aggregates — the fold chain runs vocabulary-many times, not
+    corpus-many; only slim pairs shuffle."""
     _check_keep(keep, ("doc_id", *_BPE_PRODUCED))
-    if strategy == "inline":
-        segged = F.transform(
-            F.col("_pts"),
-            lambda t: apply_bpe_merges_expr(chars_expr(t), merges),
-        )
-        return (
-            df.withColumn("_pts", pretokens_expr(F.col(text_col)))
-            .withColumn("_seg", segged)
-            .select(
-                "doc_id",
-                *keep,
-                F.aggregate(
-                    "_seg",
-                    F.lit(0).cast("long"),
-                    lambda acc, s: acc + F.size(s),
-                ).alias("bpe_merged_tokens"),
-                F.coalesce(
-                    F.array_max(
-                        F.flatten(
-                            F.transform(
-                                "_seg",
-                                lambda s: F.transform(s, F.length),
-                            )
-                        )
-                    ),
-                    F.lit(0),
-                )
-                .cast("long")
-                .alias("bpe_longest_sym"),
-            )
-        )
-    if strategy != "distinct":
-        raise ValueError(f"unknown strategy {strategy!r}")
     tok = df.select(
         "doc_id", F.explode(pretokens_expr(F.col(text_col))).alias("tok")
     )

@@ -37,12 +37,10 @@ Pipeline shape (and why it scales):
    shape, the shuffle carries ~distinct-features-per-partition rows.
    The vocabulary cap (top_k by total count, feature ASC tie-break) is a
    total order -> deterministic at any parallelism.
- - `with_classifier_score`: strategy='join' explodes slim
-   (doc_id, feature) pairs and broadcast-joins the top_k-bounded weight
-   table (document text never shuffles; the one exchange carries partial
-   per-doc sums). strategy='udf' broadcasts the weight dict and scores
-   in one Arrow-batched pass — zero shuffle, the production fastText
-   deployment shape. Identical outputs, pinned by tests.
+ - `with_classifier_score`: explodes slim (doc_id, feature) pairs and
+   broadcast-joins the top_k-bounded weight table (document text never
+   shuffles; the one exchange carries partial per-doc sums). It stays
+   JVM-side end to end: no Arrow round-trip to a Python worker.
 
 Division note: scores are SIGNED. Spark `DIV` truncates toward zero while
 DuckDB `//` floors, so the per-token mean divides magnitudes only
@@ -56,8 +54,6 @@ without model-based filtering; this extends the curation family
 from __future__ import annotations
 
 import hashlib
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -241,7 +237,6 @@ def with_classifier_score(
     text_col: str = "text",
     bigram_buckets: int | None = DEFAULT_BUCKETS,
     salt: str = "clfbg",
-    strategy: str = "join",
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Score each document against a trained model
@@ -256,17 +251,9 @@ def with_classifier_score(
                           magnitude DIV; 0 for empty documents)
       clf_pred          : 1 when clf_score_bits >= 0 (positive-class call)
 
-    strategy='join': explode -> broadcast-join weights -> re-aggregate
-    (slim pairs only). strategy='udf': Arrow-batched pandas UDF over a
-    broadcast dict, zero shuffle — identical outputs, pinned by
-    tests/test_classifier.py."""
+    Explode -> broadcast-join weights -> re-aggregate (slim pairs only)."""
     _check_keep(keep, ("doc_id", *_CLF_PRODUCED))
-    if strategy == "join":
-        scored = _score_join(df, counts, text_col, bigram_buckets, salt)
-    elif strategy == "udf":
-        scored = _score_udf(df, counts, text_col, bigram_buckets, salt)
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+    scored = _score_join(df, counts, text_col, bigram_buckets, salt)
     out = df.select("doc_id", *keep).join(scored, "doc_id", "left")
     zero = F.lit(0).cast("long")
     if priors is not None:
@@ -358,67 +345,6 @@ def _bucket_py(s: str, salt: str, n_buckets: int) -> int:
     return int(h[:HASH_HEX_DIGITS], 16) % n_buckets
 
 
-def _score_udf(
-    df: DataFrame,
-    counts: DataFrame,
-    text_col: str,
-    bigram_buckets: int | None,
-    salt: str,
-) -> DataFrame:
-    """Zero-shuffle scorer: the top_k-bounded weight table is collected
-    once and SparkContext-broadcast (the fastText deployment shape — a
-    trained model is a fixed artifact at scoring time)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    rows = _weight_table(counts).collect()
-    table = {r["feat"]: r["w"] for r in rows}
-    oov_w = rows[0]["oov_w"] if rows else 0
-    spark = df.sparkSession
-    btable = spark.sparkContext.broadcast((table, oov_w))
-
-    out_t = StructType(
-        [
-            StructField("clf_tokens", LongType()),
-            StructField("clf_oov", LongType()),
-            StructField("_bits", LongType()),
-        ]
-    )
-
-    @F.pandas_udf(out_t)
-    def score(texts: pd.Series) -> pd.DataFrame:
-        tbl, oov = btable.value
-        rows_out = []
-        for text in texts:
-            toks = [t for t in (text or "").split(" ") if t]
-            feats = list(toks)
-            if bigram_buckets:
-                for i in range(len(toks) - 1):
-                    g = toks[i] + " " + toks[i + 1]
-                    feats.append(
-                        "bg" + str(_bucket_py(g, salt, bigram_buckets))
-                    )
-            bits = 0
-            n_oov = 0
-            for ft in feats:
-                v = tbl.get(ft)
-                if v is None:
-                    n_oov += 1
-                    bits += oov
-                else:
-                    bits += v
-            rows_out.append((len(feats), n_oov, bits))
-        return pd.DataFrame(
-            rows_out, columns=["clf_tokens", "clf_oov", "_bits"]
-        )
-
-    # struct computed once behind a Project boundary, fields fanned out
-    # (CLAUDE.md lesson #1; callers follow the keep/compose contract so
-    # no predicate is pushed across this projection — lesson #9 pin not
-    # needed here, mirroring lm._score_udf)
-    tmp = df.select("doc_id", score(F.col(text_col)).alias("_clf"))
-    return tmp.select("doc_id", "_clf.*")
-
-
 def classifier_oracle_sql(
     source_cte: str = "documents",
     text_sql: str = "text",
@@ -429,7 +355,7 @@ def classifier_oracle_sql(
     train_pmille: int = 1000,
     hash_sql: str | None = None,
 ) -> str:
-    """DuckDB CTE chain mirroring train (+priors) + score (join strategy)
+    """DuckDB CTE chain mirroring train (+priors) + score
     from scratch; final CTE `clf_out` yields (doc_id, clf_tokens,
     clf_oov, clf_score_bits, clf_score_mean_e3, clf_pred) from
     `source_cte`. `hash_sql` must be packing.hash_key_sql('doc_id',

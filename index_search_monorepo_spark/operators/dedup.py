@@ -483,22 +483,14 @@ def lsh_candidate_pairs(
     n: int = 4,
     persist_bands: bool = True,
     cache_registry: list | None = None,
-    via: str = "join",
 ) -> DataFrame:
     """MinHash+LSH: band the k-wide signature into k/band_size bands, bucket
     on md5(band values), emit distinct candidate pairs per shared bucket.
 
-    via='join' (default): equality self-join of the persisted band frame
-    — at bench scale AQE broadcasts one side, so the probe side never
-    shuffles. via='group' (r6 alternative, equality pinned by test):
-    one pass over the band frame — group by (band_no, bucket), expand
-    in-bucket pairs with a sorted slice-after-i transform, explode,
-    distinct. The proper interleaved A/B read join 0.30 vs group 0.53 s
-    at sf0.1 and parity (0.63 both) at 50k docs — the collect_list
-    shuffle costs more than the broadcast build until the band frame
-    outgrows broadcast range, which is where 'group' (no broadcast, one
-    frame read) becomes the right plan; an earlier single-window win for
-    'group' did not reproduce (measure, don't assume).
+    An equality self-join of the persisted band frame — at bench scale AQE
+    broadcasts one side, so the probe side never shuffles. (A group-by-
+    bucket pair expansion lost the interleaved A/B: 0.53 vs 0.30 s at
+    sf0.1, parity at 50k docs.)
 
     persist_bands=True pins the tiny (doc_id, band_no, bucket) frame:
     without persist every consumer re-runs the dominant tokenize ->
@@ -508,41 +500,15 @@ def lsh_candidate_pairs(
     bands = lsh_bands(df, text_col, k, band_size, n)
     if persist_bands:
         bands = _persist(bands, cache_registry)
-    if via == "join":
-        a = bands.alias("a")
-        b = bands.alias("b")
-        return (
-            a.join(b, ["band_no", "bucket"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
-    # ids are unique within a bucket (one row per (doc, band)), so the
-    # sorted slice-after-i expansion yields exactly the a < b pairs the
-    # self-join filter produced; the doc_id null-filter mirrors the
-    # join's null-key drop
-    grouped = (
-        bands.filter(F.col("doc_id").isNotNull())
-        .groupBy("band_no", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("_ids"))
-        .filter(F.size("_ids") >= 2)
-    )
-    ids = F.col("_ids")
-    pair_structs = F.flatten(
-        F.transform(
-            ids,
-            lambda a, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b")),
-            ),
-        )
-    )
+    a = bands.alias("a")
+    b = bands.alias("b")
     return (
-        grouped.select(F.explode(pair_structs).alias("p"))
-        .select("p.doc_a", "p.doc_b")
+        a.join(b, ["band_no", "bucket"])
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+        )
         .distinct()
     )
 

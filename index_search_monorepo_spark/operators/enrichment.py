@@ -68,16 +68,15 @@ def with_mysql_fields(
     mb_coll_item: DataFrame,
     mb_collection: DataFrame,
     doc_id_col: str = "doc_id",
-    persist_dims: bool = True,
     dim_join: str | None = None,
 ) -> DataFrame:
     """All four enrichments as left joins; adds columns
     rights, ht_heldby, ht_heldby_brlm, coll_id.
 
-    persist_dims pins the once-per-job dim-build semantic: on a real run the
-    four pre-aggregates are built once; without persist a caller that
-    materializes the output k times rebuilds them k times (at small scale
-    that near-serial rebuild dominates high-core wall time).
+    The four pre-aggregates are persisted, pinning the once-per-job
+    dim-build semantic: without it a caller that materializes the output
+    k times rebuilds them k times (at small scale that near-serial rebuild
+    dominates high-core wall time).
 
     dim_join (r6): join-strategy hint ("shuffle_hash" | "merge") for the
     four dims. Default None keeps the broadcast plan (one-shot jobs at
@@ -92,15 +91,19 @@ def with_mysql_fields(
     every dim join (and the downstream doc_id-keyed metadata joins)
     reuses that partitioning, so the dim build parallelizes instead of
     serializing on the driver. The rights dim is re-keyed to
-    doc_id = concat(namespace, '.', id), exactly equivalent to the
-    (namespace, object_id) pair join: split-at-first-dot reconstructs
-    the id losslessly, and both forms null out for dot-less ids
-    (object_id NULL never equality-matches; concat NULL-propagates)."""
+    doc_id = concat(namespace, '.', id), equivalent to the
+    (namespace, object_id) pair join once rights rows with a dotted
+    namespace are dropped: split-at-first-dot never yields one, so such a
+    row can only re-key onto another pair's doc_id ('a.b' + 'c' vs
+    'a' + 'b.c'). Both forms null out for dot-less ids (object_id NULL
+    never equality-matches; concat NULL-propagates)."""
     did = F.col(doc_id_col)
     heldby, brlm = holdings_dims(holdings)
     colls = coll_dim(mb_coll_item, mb_collection)
     if dim_join:
-        r = rights_dim(rights_current).select(
+        r = rights_dim(
+            rights_current.filter(~F.col("namespace").contains("."))
+        ).select(
             F.concat(F.col("namespace"), F.lit("."), F.col("id")).alias(
                 doc_id_col
             ),
@@ -109,13 +112,9 @@ def with_mysql_fields(
         heldby = heldby.withColumnRenamed("volume_id", doc_id_col)
         brlm = brlm.withColumnRenamed("volume_id", doc_id_col)
         colls = colls.withColumnRenamed("extern_item_id", doc_id_col)
-        if persist_dims:
-            r, heldby, brlm, colls = (
-                r.persist(),
-                heldby.persist(),
-                brlm.persist(),
-                colls.persist(),
-            )
+        r, heldby, brlm, colls = (
+            d.persist() for d in (r, heldby, brlm, colls)
+        )
         return (
             docs.join(r.hint(dim_join), doc_id_col, "left")
             .join(heldby.hint(dim_join), doc_id_col, "left")
@@ -129,13 +128,7 @@ def with_mysql_fields(
     r = rights_dim(rights_current).withColumnsRenamed(
         {"namespace": "_ns", "id": "_obj"}
     )
-    if persist_dims:
-        r, heldby, brlm, colls = (
-            r.persist(),
-            heldby.persist(),
-            brlm.persist(),
-            colls.persist(),
-        )
+    r, heldby, brlm, colls = (d.persist() for d in (r, heldby, brlm, colls))
     out = (
         docs.join(broadcast(r), ["_ns", "_obj"], "left")
         .join(

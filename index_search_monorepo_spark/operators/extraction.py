@@ -95,7 +95,6 @@ def with_ocr_skew_aware(
     df: DataFrame,
     spans_col: str = "spans",
     page_threshold: int = 1000,
-    single_scan: bool = True,
 ) -> DataFrame:
     """A1 with explicit skew handling (O13). Docs with ≤ threshold spans take
     the zero-shuffle per-row path; oversized volumes are exploded so their
@@ -104,17 +103,14 @@ def with_ocr_skew_aware(
     row order). The big path touches only the skew fraction (~2%), so the
     extra shuffle is tiny and bounded.
 
-    single_scan=True (default) persists the input before branching: the
-    size(spans) filters cannot prune a parquet scan, so the naive two-branch
-    plan decodes every spans.text column chunk TWICE (VERDICT r01 #5). The
-    persisted working set is read once from source and served to both
-    branches from executor memory/local disk (LRU-evicted afterwards). Pass
-    single_scan=False on object-store clusters where re-scanning is cheaper
-    than caching the working set."""
-    if single_scan:
-        from pyspark import StorageLevel
+    The input is persisted before branching: the size(spans) filters
+    cannot prune a parquet scan, so the naive two-branch plan decodes every
+    spans.text column chunk TWICE (VERDICT r01 #5). The persisted working
+    set is read once from source and served to both branches from executor
+    memory/local disk (LRU-evicted afterwards)."""
+    from pyspark import StorageLevel
 
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     n = F.size(F.col(spans_col))
     small = df.filter(n <= page_threshold).withColumn(
         "ocr", ocr_expr(F.col(spans_col))

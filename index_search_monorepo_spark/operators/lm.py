@@ -36,9 +36,8 @@ Pipeline shape (and why it scales):
    broadcast-join the vocabulary (top_k-bounded — fits any executor),
    groupBy(doc_id) re-aggregate. The only exchange carries slim
    (doc_id, long) pairs with map-side partial sums; document text never
-   shuffles. strategy='udf': an Arrow-batched pandas UDF over a
-   SparkContext-broadcast python dict — zero shuffle, for callers composing
-   onto already-fat rows; same columns bit-for-bit (pinned by test).
+   shuffles. strategy='map': the same scores from a one-row broadcast map
+   and a per-row fold — no corpus shuffle and no doc-grain join.
 
 The module also carries the bigram upgrade of the same slot: stupid
 backoff (Brants et al. 2007, "Large Language Models in Machine
@@ -55,8 +54,6 @@ without model-based quality filtering; this extends the curation family
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -157,9 +154,7 @@ def with_lm_nll(
                         quality ranking key; 0 for empty documents
 
     strategy='join': explode -> broadcast-join vocab -> re-aggregate on
-    doc_id (slim pairs only; map-side partial sums). strategy='udf':
-    Arrow-batched pandas UDF over a broadcast dict, zero shuffle —
-    identical outputs, pinned by tests/test_lm.py. strategy='map':
+    doc_id (slim pairs only; map-side partial sums). strategy='map':
     the nll table rides as a ONE-ROW broadcast map (map_from_entries +
     crossJoin(broadcast) + try_element_at — the with_mixture_sampling
     convention, CLAUDE.md lessons #10/#11) and the score is a pure
@@ -170,12 +165,9 @@ def with_lm_nll(
     _check_keep(keep, ("doc_id", *_LM_PRODUCED))
     if strategy == "map":
         return _score_map(df, counts, text_col, keep, registry)
-    if strategy == "join":
-        scored = _score_join(df, counts, text_col)
-    elif strategy == "udf":
-        scored = _score_udf(df, counts, text_col)
-    else:
+    if strategy != "join":
         raise ValueError(f"unknown strategy {strategy!r}")
+    scored = _score_join(df, counts, text_col)
     out = df.select("doc_id", *keep).join(scored, "doc_id", "left")
     zero = F.lit(0).cast("long")
     return out.select(
@@ -300,66 +292,6 @@ def _score_join(df: DataFrame, counts: DataFrame, text_col: str) -> DataFrame:
             ).alias("lm_nll_mean_e3"),
         )
     )
-
-
-def _score_udf(df: DataFrame, counts: DataFrame, text_col: str) -> DataFrame:
-    """Zero-shuffle scorer: vocabulary (top_k-bounded) collected once and
-    SparkContext-broadcast; an Arrow-batched pandas UDF sums bit-length
-    NLLs per row. The collect is the broadcast-dim pattern (bounded by
-    top_k, like the decontamination shingle set) — never corpus-sized."""
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    rows = _nll_table(counts).collect()
-    table = {r["token"]: r["nll"] for r in rows}
-    oov_nll = rows[0]["oov_nll"] if rows else 0
-    spark = df.sparkSession
-    btable = spark.sparkContext.broadcast((table, oov_nll))
-
-    out_t = StructType(
-        [
-            StructField("lm_tokens", LongType()),
-            StructField("lm_oov", LongType()),
-            StructField("lm_nll_bits", LongType()),
-            StructField("lm_nll_mean_e3", LongType()),
-        ]
-    )
-
-    @F.pandas_udf(out_t)
-    def score(texts: pd.Series) -> pd.DataFrame:
-        tbl, oov = btable.value
-        rows_out = []
-        for text in texts:
-            toks = [t for t in (text or "").split(" ") if t]
-            bits = 0
-            n_oov = 0
-            for t in toks:
-                v = tbl.get(t)
-                if v is None:
-                    n_oov += 1
-                    bits += oov
-                else:
-                    bits += v
-            n = len(toks)
-            rows_out.append(
-                (n, n_oov, bits, (1000 * bits) // n if n else 0)
-            )
-        return pd.DataFrame(
-            rows_out,
-            columns=["lm_tokens", "lm_oov", "lm_nll_bits", "lm_nll_mean_e3"],
-        )
-
-    # one struct column computed once, then fanned out to plain columns —
-    # fan-out of struct FIELDS is cheap extraction, and the UDF sits behind
-    # a Project boundary so it is not re-inlined per field (CLAUDE.md
-    # lesson #1; the nondeterministic pin of lesson #9 is unnecessary here
-    # because no filter is pushed across this projection by callers that
-    # follow the documented keep/compose contract)
-    tmp = df.select("doc_id", score(F.col(text_col)).alias("_lm"))
-    return tmp.select("doc_id", "_lm.*")
 
 
 _ML_PRODUCED = (

@@ -34,7 +34,6 @@ from index_search_monorepo_spark.operators.checkpoint import (
 from index_search_monorepo_spark.operators.enrichment import with_mysql_fields
 from index_search_monorepo_spark.operators.errors import split_errors
 from index_search_monorepo_spark.operators.extraction import (
-    with_extracted_spans,
     with_mets_fields,
     with_ocr_skew_aware,
 )
@@ -57,10 +56,7 @@ def load_corpus(spark: SparkSession, corpus_dir: str) -> dict[str, DataFrame]:
 def extract_documents(
     spark: SparkSession,
     tables: dict[str, DataFrame],
-    include_poison: bool = True,
     page_threshold: int = 10_000,
-    repartition: bool = True,
-    persist_dims: bool = True,
     doc_meta_join: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     # doc_meta_join: join strategy hint ("shuffle_hash" | "merge" | None=auto)
@@ -71,10 +67,7 @@ def extract_documents(
     # scale they must shuffle (or be bucket-co-located at write time). None
     # lets Catalyst/AQE decide, which at bench scale picks broadcast: correct
     # for a one-shot job, but the per-run driver-side broadcast build is a
-    # fixed serial cost that a 1000-executor run would not have. For
-    # repeated-enrichment deployments, write both sides bucketed on doc_id
-    # instead (operators/bucketing.py) — the join then needs no Exchange at
-    # all (test_bucketing.py).
+    # fixed serial cost that a 1000-executor run would not have.
     # page_threshold: docs above it take the explode->distribute->reassemble
     # path (extraction.with_ocr_skew_aware). Measured ablation (BASELINE.md):
     # at 2 000 pages/doc the per-row work is ~10 ms, and in-place processing
@@ -83,11 +76,10 @@ def extract_documents(
     # (pathological 10^5-page volumes), so the default is deliberately high.
     """Full §1.3 document assembly. Returns (documents, errors)."""
     spans = tables["documents_spans"]
-    if include_poison and "documents_spans_bad" in tables:
+    if "documents_spans_bad" in tables:
         spans = spans.unionByName(tables["documents_spans_bad"])
     clean, errors = split_errors(spans)
-    if repartition:
-        clean = salted_repartition(clean, skip_if_scan_parallel=True)
+    clean = salted_repartition(clean, skip_if_scan_parallel=True)
     docs = with_ocr_skew_aware(clean, page_threshold=page_threshold)
     docs = docs.withColumn("span_count", F.size("spans")).drop("spans")
     docs = with_mysql_fields(
@@ -96,7 +88,6 @@ def extract_documents(
         tables["holdings_htitem_htmember"],
         tables["mb_coll_item"],
         tables["mb_collection"],
-        persist_dims=persist_dims,
         # r6: the hint covers ALL doc-cardinality metadata joins — the four
         # MySQL dims are per-volume tables too (rights_current ~17M rows at
         # reference scale), and their per-materialization driver-side
@@ -113,15 +104,13 @@ def extract_documents(
         "allfields", extract_allfields(F.col("fullrecord"))
     )
     items = catalog_item_metadata(catalog, extra_passthrough=("allfields",))
-    mets = with_mets_fields(tables["mets_meta"])
-    if persist_dims:
-        # broadcast dims are built once per job on a real run (their cost
-        # amortizes to zero against the fact side); persisting pins that
-        # once-per-job semantic for callers that materialize the output
-        # multiple times. Dim cardinality is bounded (catalog items, per-doc
-        # METS fields), so the footprint is small.
-        items = items.persist()
-        mets = mets.persist()
+    # broadcast dims are built once per job on a real run (their cost
+    # amortizes to zero against the fact side); persisting pins that
+    # once-per-job semantic for callers that materialize the output
+    # multiple times. Dim cardinality is bounded (catalog items, per-doc
+    # METS fields), so the footprint is small.
+    items = items.persist()
+    mets = with_mets_fields(tables["mets_meta"]).persist()
     if doc_meta_join:
         items = items.hint(doc_meta_join)
         mets = mets.hint(doc_meta_join)
@@ -129,19 +118,6 @@ def extract_documents(
         docs, items.drop("fullrecord"), mets, extra_cols=("span_count",)
     )
     return assembled, errors
-
-
-def extract_span_sequences(
-    spark: SparkSession, tables: dict[str, DataFrame]
-) -> tuple[DataFrame, DataFrame]:
-    """North-rule output mode: (doc_id, extracted_spans) — the per-document
-    span sequence (kind, text, media_ref, offset) in canonical order."""
-    spans = tables["documents_spans"]
-    if "documents_spans_bad" in tables:
-        spans = spans.unionByName(tables["documents_spans_bad"])
-    clean, errors = split_errors(spans)
-    out = with_extracted_spans(clean).select("doc_id", "extracted_spans")
-    return out, errors
 
 
 def run_extraction_job(

@@ -1,5 +1,5 @@
 """BPE trainer + merge application: hand-exact training (tie-break
-included), fold semantics (repeat chains, empties), strategy equality,
+included), fold semantics (repeat chains, empties), the merge-count cap,
 DuckDB oracle parity, the sequential-pass equivalence property against a
 reference priority implementation, and the broadcast plan shape."""
 
@@ -147,30 +147,6 @@ class TestTrainBpe:
 
 
 class TestWithBpeTokens:
-    def test_strategies_identical(self, spark):
-        docs = _docs(spark)
-        merges = B.train_bpe(docs, n_merges=6)
-        cols = ["doc_id", *B._BPE_PRODUCED]
-        a = sorted(
-            map(
-                tuple,
-                B.with_bpe_tokens(docs, merges, strategy="distinct")
-                .select(cols)
-                .collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                B.with_bpe_tokens(docs, merges, strategy="inline")
-                .select(cols)
-                .collect(),
-            )
-        )
-        assert a == b
-        # merging actually happened: longest symbol beyond one char
-        assert max(r[2] for r in a) >= 2
-
     def test_duckdb_oracle_parity(self, spark):
         docs = _docs(spark)
         merges = B.train_bpe(docs, n_merges=6)
@@ -198,6 +174,8 @@ class TestWithBpeTokens:
             )
         )
         assert got == want
+        # merging actually happened: longest symbol beyond one char
+        assert max(r[2] for r in got) >= 2
 
     def test_distinct_strategy_plan_shape(self, spark):
         docs = _docs(spark)
@@ -217,4 +195,4 @@ class TestWithBpeTokens:
         docs = _docs(spark)
         too_many = [(f"a{i}", "b") for i in range(B.MAX_INLINE_MERGES + 1)]
         with pytest.raises(ValueError):
-            B.with_bpe_tokens(docs, too_many, strategy="inline")
+            B.with_bpe_tokens(docs, too_many)

@@ -280,21 +280,6 @@ class TestScaleGuards:
         # bands 1-2 read fully out-of-range coords -> bucket 0, no error
         assert out[(1, 1)] == 0 and out[(1, 2)] == 0
 
-    def test_group_expansion_matches_self_join(self, spark):
-        """via='group' (the non-default alternative: one band-frame pass,
-        in-bucket pair expansion) must emit exactly the pair set of the
-        default via='join' equality self-join."""
-        docs = _docs(spark)
-        g = {
-            (r["doc_a"], r["doc_b"])
-            for r in D.lsh_candidate_pairs(docs, via="group").collect()
-        }
-        j = {
-            (r["doc_a"], r["doc_b"])
-            for r in D.lsh_candidate_pairs(docs, via="join").collect()
-        }
-        assert g == j and all(a < b for a, b in g)
-
     def test_cache_registry_release(self, spark):
         docs = _docs(spark).limit(50)
         reg: list = []

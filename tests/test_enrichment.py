@@ -5,23 +5,43 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pytest
+
 from index_search_monorepo_spark.operators.enrichment import with_mysql_fields
 from index_search_monorepo_spark.oracle.reference_oracle import oracle_mysql_fields
 
 
-def test_mysql_fields_match_oracle(spark, tables):
+@pytest.mark.parametrize("dim_join", [None, "shuffle_hash"])
+def test_mysql_fields_match_oracle(spark, tables, dim_join):
     docs = tables["documents_spans"].select("doc_id")
+    # for every doc id with two dots ('ns.afs0001.0001.001') add a rights
+    # row split at the SECOND dot: concat(namespace, '.', id) equals the
+    # doc id, but the reference's split-at-first-dot never looks it up
+    collide = [
+        (ns2, obj2, 7)
+        for (d,) in docs.collect()
+        if d.count(".") >= 2
+        for ns2, _, obj2 in [d.rpartition(".")]
+    ]
+    assert collide
+    rights = tables["rights_current"].unionByName(
+        spark.createDataFrame(collide, tables["rights_current"].schema)
+    )
     out = with_mysql_fields(
         docs,
-        tables["rights_current"],
+        rights,
         tables["holdings_htitem_htmember"],
         tables["mb_coll_item"],
         tables["mb_collection"],
+        dim_join=dim_join,
     )
-    got = {r["doc_id"]: r for r in out.collect()}
+    rows = out.collect()
+    got = {r["doc_id"]: r for r in rows}
+    # one output row per doc (the dict alone would hide duplicates)
+    assert len(rows) == len(got) == docs.count()
 
     rights_rows = defaultdict(list)
-    for r in tables["rights_current"].collect():
+    for r in rights.collect():
         rights_rows[(r["namespace"], r["id"])].append(r.asDict())
     heldby_rows = defaultdict(list)
     for r in tables["holdings_htitem_htmember"].collect():

@@ -1,5 +1,5 @@
 """Unigram-LM quality scoring + temperature mixture sampling: hand-exact
-NLL math, join/udf strategy equality, DuckDB oracle parity, isqrt
+NLL math, join/map strategy equality, DuckDB oracle parity, isqrt
 exactness, and the broadcast plan shape (corpus never shuffles)."""
 
 from __future__ import annotations
@@ -88,7 +88,7 @@ class TestLmNll:
                 .select(cols).collect())
         )
         b = sorted(
-            map(tuple, LM.with_lm_nll(docs, counts, strategy="udf")
+            map(tuple, LM.with_lm_nll(docs, counts, strategy="map")
                 .select(cols).collect())
         )
         assert a == b

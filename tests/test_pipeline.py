@@ -181,7 +181,10 @@ def test_publish_snapshot_versions_extraction_output(spark, tables, tmp_path):
         publish_snapshot,
     )
 
-    docs, _ = extract_documents(spark, tables, include_poison=False)
+    clean_tables = {
+        k: v for k, v in tables.items() if k != "documents_spans_bad"
+    }
+    docs, _ = extract_documents(spark, clean_tables)
     docs = docs.select("id", "ocr", "span_count")
     tdir = str(tmp_path / "corpus_table")
     m1 = publish_snapshot(spark, docs, tdir)

@@ -176,9 +176,9 @@ def test_doc_meta_join_hint_drops_driver_broadcast_build(spark, tables):
     docs). The hint must produce ShuffledHashJoins for all six
     doc-cardinality joins, sharing one fact-side doc_id exchange, with
     zero doc-cardinality BroadcastHashJoins left in the plan."""
-    auto_docs, _ = extract_documents(spark, tables, persist_dims=False)
+    auto_docs, _ = extract_documents(spark, tables)
     hinted_docs, _ = extract_documents(
-        spark, tables, persist_dims=False, doc_meta_join="shuffle_hash"
+        spark, tables, doc_meta_join="shuffle_hash"
     )
     hinted = _plan(hinted_docs)
     # items + mets + rights + heldby + brlm + colls
